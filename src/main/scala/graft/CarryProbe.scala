@@ -16,7 +16,7 @@ object CarryProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.getOrCreate(cpus)
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = GraftSession.table(spark, dir, "lineitem")
     val vIdx = li.schema.fieldIndex("l_quantity")
     val n = li.rdd.getNumPartitions
     // the EXACT payload Fill.ffill collects: (pid, last-non-null scalar)

@@ -65,7 +65,7 @@ object GraftSession {
 
   /** Read one fixture table from a scale-factor directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.TableSchemaCache.read(spark, s"$sfDir/$name.parquet")
 
   /** events fixture: ns-precision `ts` arrives as long (see
     * `nanosAsLong` above); convert to a µs timestamp.  Fixture timestamps

@@ -37,7 +37,7 @@ object ScaleGen {
         d.withColumn(k, col(k) + col("__rep") * KEY_STRIDE)
       }.drop("__rep")
     }
-    def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def t(name: String): DataFrame = GraftSession.table(spark, src, name)
     def write(df: DataFrame, name: String): Unit = {
       // target ~64 MB files so a replica scan exposes row-group-level
       // parallelism (r15 scaling finding: the 100x lineitem landed in 2

@@ -18,7 +18,7 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") GraftSession.events(s, dir)
-    else s.read.parquet(s"$dir/$name.parquet")
+    else GraftSession.table(s, dir, name)
   private def g(s: SparkSession, dir: String, name: String): GDF =
     GDF(t(s, dir, name))
 
@@ -78,6 +78,15 @@ object SparkEntry {
     * Streaming semantics are untouched: same source, same watermarks,
     * same state store, same per-batch output row multiset — only the
     * sink changed.
+    *
+    * Single-JVM assumption: the persisted-batch sink and the
+    * `localCheckpoint` of the result assume a `local` master, where the
+    * driver and the only executor share one JVM and its block storage.
+    * Neither is fault tolerant: on a cluster, a lost executor loses
+    * cached batch blocks, and Spark would recompute a micro-batch plan
+    * that cannot be re-executed once the stream has moved on. The
+    * engine's declared replays run only under `GraftSession.builder`'s
+    * local master.
     */
   private[graft] def drainReplay(out: DataFrame, runDir: String, name: String,
                                  run: String, mode: String)
@@ -120,9 +129,9 @@ object SparkEntry {
     * replay runs at 4 partitions and the session setting is restored
     * after; (2) checkpoint/watch-dir I/O — /tmp is disk here, so the run
     * directory lives on tmpfs (/dev/shm) when available and is deleted
-    * afterwards (the memory sink holds the result rows; the files are
-    * not needed once processAllAvailable returns). `body` receives
-    * (runDir, runId).
+    * afterwards (`drainReplay` returns its result as an eager local
+    * checkpoint in block storage, so the files are not needed once it
+    * returns). `body` receives (runDir, runId).
     */
   private def replayRun[T](s: SparkSession)(body: (String, String) => T): T = {
     val run = java.util.UUID.randomUUID.toString.replace("-", "")
@@ -1624,7 +1633,7 @@ object SparkEntry {
       s.createDataFrame(rdd, outSchema)
     },
     // ---- streaming: sessionize batch-replay — the REAL streaming
-    // pipeline (file source → mapGroupsWithState → memory sink) runs over
+    // pipeline (file source → mapGroupsWithState → persisted-batch sink) runs over
     // the events table as one micro-batch; each user's emitted row is the
     // state after the fold = its LAST session, which the oracle replays
     // as gaps-and-islands SQL.  value travels as integer cents so the
@@ -1739,7 +1748,7 @@ object SparkEntry {
     },
     // ---- ext: stream-static broadcast enrichment (left join keeps
     // stream rows with no dimension match), replayed through the real
-    // engine; the memory-sink rows are then aggregated per segment so
+    // engine; the drained rows are then aggregated per segment so
     // the oracle is a plain LEFT JOIN + GROUP BY.  cents are exact.
     "q146_enrich_replay" -> { (s, dir) =>
       val src = t(s, dir, "events").select(
@@ -1753,9 +1762,9 @@ object SparkEntry {
         val watch = s"$runDir/enrich_in"
         writeStreamFile(src, watch, "b1", java.lang.System.currentTimeMillis())
         val stream = s.readStream.schema(src.schema).parquet(watch)
-        // the finishing aggregate runs over the DISTRIBUTED sink files, so
-        // only the per-segment result (a handful of rows) is retained —
-        // the memory sink previously held one driver row per EVENT
+        // the finishing aggregate runs over the DISTRIBUTED persisted
+        // batches, so only the per-segment result (a handful of rows) is
+        // retained — the memory sink previously held one driver row per EVENT
         drainReplay(graft.streaming.StreamOps.enrich(stream, dim, Seq("user_id")),
           runDir, "q146_enrich", run, "append") { f =>
           f.groupBy("c_mktsegment")

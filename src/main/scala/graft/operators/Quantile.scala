@@ -43,13 +43,15 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * `doubleToLongBits`, matching the builtin's boxed-key comparison
   * (distinguishes -0.0 from 0.0, collapses NaNs), not primitive `==`.
   * Nulls are dropped like the builtin; NaN is COUNTED like the builtin
-  * (a value ordered greatest). One documented divergence: the SQL sort
-  * orders -0.0 and 0.0 as EQUAL where the builtin's physical ordering
-  * puts -0.0 first, so on data containing BOTH signed zeros an order
-  * statistic landing inside that run may return the other zero —
-  * numerically `==`, different bit pattern. QuantileSpec pins `==`
-  * equality against the builtin on fixture data and the edge shapes
-  * (single row, ties, p = 0/1, exact-integer positions, NaN).
+  * (a value ordered greatest). One documented divergence: -0.0 is
+  * normalised to 0.0 when `__v` is built, so a statistic that lands on a
+  * zero is always +0.0. Without it the SQL sort, which orders the two
+  * zeros as EQUAL, could return either zero for the same input depending
+  * on the shuffle; the builtin, whose physical ordering puts -0.0 first,
+  * may return -0.0 there — numerically `==`, different bit pattern.
+  * QuantileSpec pins `==` equality against the builtin on fixture data
+  * and the edge shapes (single row, ties, p = 0/1, exact-integer
+  * positions, NaN, both signed zeros).
   *
   * The reference computes dataframe quantiles via per-partition
   * sketches merged on one worker (`dask_expr/_quantile.py`) —
@@ -57,6 +59,16 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * the same concentrate-then-select bound this removes.
   */
 object Quantile {
+
+  /** The value column `__v`: cast to double, -0.0 normalised to 0.0 (SQL
+    * `=` treats the two zeros as equal, so the `when` catches both; NaN
+    * and null pass through unchanged). See the signed-zero paragraph of
+    * the scaladoc contract above.
+    */
+  private def value(c: String) = {
+    val v = col(c).cast("double")
+    when(v === 0.0, lit(0.0)).otherwise(v).as("__v")
+  }
 
   /** `Percentile.getPercentile`'s interpolation, bit-for-bit (see the
     * scaladoc contract above).
@@ -80,7 +92,7 @@ object Quantile {
     val spark = df.sparkSession
     // isNotNull, NOT na.drop(): the builtin counts NaN as a value
     // (ordered greatest) and na.drop would silently drop it too
-    val vals = df.select(col(colName).cast("double").as("__v"))
+    val vals = df.select(value(colName))
       .filter(col("__v").isNotNull)
     // the scan's partition count follows file layout, not data size — a
     // 2-file replica gave the 40x sort ~4 partitions and its tasks
@@ -184,7 +196,7 @@ object Quantile {
       s"percentile probabilities must be in [0,1]: $ps")
     val spark = df.sparkSession
     val groupField = df.schema(groupCol)
-    val base = df.select(col(groupCol), col(valueCol).cast("double").as("__v"))
+    val base = df.select(col(groupCol), value(valueCol))
       .filter(col("__v").isNotNull)
     // bounded cardinality probe: collects at most maxGroups+1 group
     // values, never the full dictionary

@@ -80,6 +80,27 @@ class QuantileSpec extends SparkTestBase {
     assert(g(2).isNaN && w(2).isNaN) // p=1.0 lands on the NaN
   }
 
+  test("signed zeros: a statistic landing on a zero is always +0.0 and == the builtin") {
+    // six zeros of both signs between -1 and 1: every probe lands inside
+    // the zero run, where the sort may put either zero at any position
+    val vs = Seq(-0.0, 0.0, -0.0, 1.0, 0.0, -1.0, -0.0, 0.0)
+    val ps = Seq(1.0 / 7, 0.3, 0.5, 4.0 / 7, 0.8)
+    val positiveZero = java.lang.Double.doubleToRawLongBits(0.0)
+    val zeros = mkDf(vs.map(Double.box))
+    val got = Quantile.exact(zeros, "v", ps)
+    val want = builtin(zeros, "v", ps)
+    got.zip(want).foreach { case (g, w) => assert(g == w) }
+    assert(got.forall(java.lang.Double.doubleToRawLongBits(_) == positiveZero),
+      s"expected +0.0 everywhere, got bits ${got.map(java.lang.Double.doubleToRawLongBits).toSeq}")
+    val grouped = spark.createDataFrame(
+      spark.sparkContext.parallelize(vs.map(v => Row("z", v)), 3),
+      StructType(Seq(StructField("g", org.apache.spark.sql.types.StringType),
+        StructField("v", DoubleType))))
+    val g = Quantile.exactGrouped(grouped, "g", "v", ps).head()
+    assert((1 to ps.size).forall(i =>
+      java.lang.Double.doubleToRawLongBits(g.getDouble(i)) == positiveZero))
+  }
+
   test("grouped: matches the builtin per group on fixture lineitem, bit-exact") {
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
     val ps = Seq(0.25, 0.5, 0.75)
